@@ -11,6 +11,7 @@ oracle_sql()   — DuckDB-equivalent SQL per query (same column names,
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
@@ -30,7 +31,7 @@ from autoprepad_spark.operators.uniqueness import duplicate_keys
 
 #: scratch dir for queries that must persist intermediate tables so the
 #: DuckDB oracle can read the SAME rows (gitignored; recreated per run)
-SCRATCH = "/root/repo/.scratch"
+SCRATCH = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

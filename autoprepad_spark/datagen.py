@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from autoprepad_spark.schema import TOKENS_SCHEMA, SOURCE_DIM_SCHEMA
+from autoprepad_spark.session import local_frame
 
 CHUNK_ROWS = 20_000
 VOCAB_SIZE = 50_257
@@ -139,8 +140,7 @@ def generate_tokens(
 
 def source_dim(spark: SparkSession) -> DataFrame:
     """Allowed-dimension table (broadcast side of the referential check)."""
-    rows = [(s, True) for s in SOURCES]
-    return spark.createDataFrame(rows, schema=SOURCE_DIM_SCHEMA)
+    return local_frame(spark, [(s, True) for s in SOURCES], SOURCE_DIM_SCHEMA)
 
 
 def write_tokens(df: DataFrame, path: str) -> None:

@@ -84,10 +84,15 @@ class CustomCheck:
                (e.g. a suggested null-rate ceiling derived from the
                observed rate). Ignored when hard=True.
 
-    Predicates evaluate JVM-side (whole-stage codegen) regardless of
+    Predicates evaluate as ordinary Column expressions regardless of
     the suite's marking engine, so arrow and native runs produce
-    identical custom flags. Expressions may reference any input column,
-    including extra columns beyond the declared schema."""
+    identical custom flags. SQL strings and built-in Column functions
+    run JVM-side (whole-stage codegen); a predicate that wraps a
+    vectorized UDF runs in Arrow Python workers instead — e.g. the
+    bounds-as-data range checks that suggest.grouped_to_custom_checks
+    emits for families above max_arms_per_check. Expressions may
+    reference any input column, including extra columns beyond the
+    declared schema."""
 
     name: str
     predicate: Column | str

@@ -11,7 +11,9 @@ The sandbox backend is an append-only parquet directory (each mark() call
 writes a new file — the same append semantics an Iceberg table gives via
 snapshot appends; swap `CheckpointTable` for a `df.writeTo(...).append()`
 on a real catalog). Idempotence: completed_parts() de-duplicates on
-(run_id, part), so a re-marked partition is harmless.
+(run_id, part), so a re-marked partition is harmless. Lineage rows are
+built on the driver as an Arrow local relation (session.local_frame), and
+a table with no files answers completed_parts() without a Spark job.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from autoprepad_spark.schema import CHECKPOINT_SCHEMA
+from autoprepad_spark.session import local_frame
 
 
 class CheckpointTable:
@@ -36,10 +39,12 @@ class CheckpointTable:
 
     def read(self) -> DataFrame:
         if not self._exists():
-            return self.spark.createDataFrame([], schema=CHECKPOINT_SCHEMA)
+            return local_frame(self.spark, [], CHECKPOINT_SCHEMA)
         return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
 
     def completed_parts(self, run_id: str) -> list[str]:
+        if not self._exists():
+            return []
         rows = (
             self.read()
             .filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
@@ -49,6 +54,16 @@ class CheckpointTable:
         )
         return sorted(r["part"] for r in rows)
 
+    def frame(
+        self,
+        run_id: str,
+        parts: list[tuple[str, int, int, float]],
+        status: str = "done",
+    ) -> DataFrame:
+        """The CHECKPOINT_SCHEMA rows mark() appends, as a local relation."""
+        rows = [(run_id, p, status, int(n), int(v), float(w)) for p, n, v, w in parts]
+        return local_frame(self.spark, rows, CHECKPOINT_SCHEMA)
+
     def mark(
         self,
         run_id: str,
@@ -56,9 +71,9 @@ class CheckpointTable:
         status: str = "done",
     ) -> None:
         """parts: [(part, n_rows, n_violations, wall_sec), ...] — one append."""
-        rows = [(run_id, p, status, int(n), int(v), float(w)) for p, n, v, w in parts]
-        df = self.spark.createDataFrame(rows, schema=CHECKPOINT_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        self.frame(run_id, parts, status).coalesce(1).write.mode("append").parquet(
+            self.path
+        )
 
     def remaining(self, df: DataFrame, run_id: str) -> DataFrame:
         """Filter the fact table to partitions not yet completed.

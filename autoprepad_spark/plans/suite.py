@@ -20,11 +20,15 @@ exactly ONCE per run:
      uniqueness branch (column-pruned scan, 8-byte shuffle keys) and a
      fused per-partition row-count branch — so verdict assembly needs no
      extra pass over the input at all
-  3. verdict assembly from the materialized violation set (tiny)
-  4. drift: histogram agg + grouped-map PSI/chi²
-Resume: partitions already in the checkpoint table are pruned from the
-scan (partition-pruning filter), uniqueness stays global so cross-
-partition duplicates are still caught.
+  3. verdict assembly from the materialized violation set (tiny),
+     densified against a driver-built check list (an Arrow local
+     relation: no job, no Python worker)
+  4. drift: histogram agg, collected; PSI/chi² scored driver-side per
+     source and returned as a local relation
+Resume: the completed set is read once (no Spark job when the checkpoint
+table has no files); its partitions are pruned from the scan (partition-
+pruning filter), uniqueness stays global so cross-partition duplicates
+are still caught.
 """
 
 from __future__ import annotations
@@ -144,7 +148,10 @@ class ValidationSuite:
         if stats is None:
             stats = global_stats(df, exact_quantiles=self.exact_quantiles)
 
-        todo = checkpoint.remaining(df, run_id) if checkpoint and run_id else df
+        # one read of the completed set serves the scan pruning below and
+        # the uniqueness filter (the same IN-filter as CheckpointTable.remaining)
+        done = checkpoint.completed_parts(run_id) if checkpoint and run_id else []
+        todo = df.filter(~F.col("part").isin(done)) if done else df
 
         custom = validate_custom_checks(self.custom_checks)
         custom_names = [c.name for c in custom]
@@ -204,10 +211,8 @@ class ValidationSuite:
                     F.lit(None).cast("string").alias("detail"),
                 )
             )
-            if checkpoint and run_id:
-                done = checkpoint.completed_parts(run_id)
-                if done:
-                    dup_viol = dup_viol.filter(~F.col("part").isin(done))
+            if done:
+                dup_viol = dup_viol.filter(~F.col("part").isin(done))
 
         # per-partition row counts ride the same job as a fused branch
         # (tagged rows in the union) instead of costing their own scan

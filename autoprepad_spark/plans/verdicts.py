@@ -15,14 +15,16 @@ materialized first (a filter on flag_total>0 keeps the output tiny), and
 per-partition verdict counts are then aggregated from the violation set
 (tiny) joined against a cheap column-pruned row-count pass, instead of
 re-running the marking UDF for the aggregation. The (part x check) grid
-is densified driver-side (both sides are small by construction).
+is densified against a driver-built check list (an Arrow local relation —
+no job, no Python worker; both sides are small by construction).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from autoprepad_spark.operators.marking import FLAG_COLS, REF_CHECK, REF_FLAG, ROW_CHECKS
+from autoprepad_spark.session import local_frame
 
 #: checks whose violations are hard failures (any violation -> fail)
 HARD_CHECKS = {
@@ -36,6 +38,7 @@ HARD_CHECKS = {
 #: statistical checks pass while the violation RATE stays under threshold
 #: (default 0.1 — the reference's top-10% labeling default, control.py:98)
 STAT_MAX_RATE = 0.1
+_CHECK_GRID_SCHEMA = T.StructType([T.StructField("check_name", T.StringType())])
 
 
 def explode_violations(marked: DataFrame, include: set[str] | None = None) -> DataFrame:
@@ -126,8 +129,9 @@ def assemble_verdicts(
     CustomCheck.stat_max_rate) — a when-chain over a handful of names,
     so the verdict expression stays pure codegen.
     """
-    spark = row_counts.sparkSession
-    checks = spark.createDataFrame([(c,) for c in check_names], ["check_name"])
+    checks = local_frame(
+        row_counts.sparkSession, [(c,) for c in check_names], _CHECK_GRID_SCHEMA
+    )
     grid = row_counts.crossJoin(F.broadcast(checks))
     counts = violations.groupBy("part", "check_name").agg(
         F.count(F.lit(1)).alias("violation_count")

@@ -28,8 +28,6 @@ import json
 import sys
 import time
 
-from pyspark.sql import functions as F
-
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="autoprepad_spark validator")
@@ -146,23 +144,25 @@ def main(argv: list[str] | None = None) -> int:
     if res.drift is not None:
         res.drift.write.mode("overwrite").parquet(f"{args.output}/drift")
 
-    # read the just-written (tiny) verdicts table back so the summary
-    # actions below don't re-run the verdict-assembly DAG per consumer
-    verdicts = spark.read.parquet(f"{args.output}/verdicts")
-    per_part = (
-        verdicts.groupBy("part")
-        .agg(
-            F.max("row_count").alias("n_rows"),
-            F.sum("violation_count").alias("n_violations"),
-        )
+    # collect the just-written (tiny) verdicts table once; the lineage
+    # rows and the summary derive from these rows driver-side
+    verdicts = (
+        spark.read.parquet(f"{args.output}/verdicts")
+        .select("part", "status", "row_count", "violation_count")
         .collect()
     )
+    n_rows: dict[str, int] = {}
+    n_violations: dict[str, int] = {}
+    for r in verdicts:
+        p = r["part"]
+        n_rows[p] = max(n_rows.get(p, 0), r["row_count"] or 0)
+        n_violations[p] = n_violations.get(p, 0) + (r["violation_count"] or 0)
+    n_fail = sum(r["status"] == "fail" for r in verdicts)
     elapsed = time.perf_counter() - t0
     if ck is not None:
         ck.mark(
             args.run_id,
-            [(r["part"], r["n_rows"] or 0, r["n_violations"] or 0, elapsed)
-             for r in per_part],
+            [(p, n_rows[p], n_violations[p], elapsed) for p in sorted(n_rows)],
         )
 
     if args.report:
@@ -170,11 +170,10 @@ def main(argv: list[str] | None = None) -> int:
 
         write_report(res, args.report, run_id=args.run_id)
 
-    n_fail = verdicts.filter(F.col("status") == "fail").count()
     summary = {
         "run_id": args.run_id,
         "rows": res.stats.n_rows,
-        "partitions_validated": len(per_part),
+        "partitions_validated": len(n_rows),
         "failed_checks": n_fail,
         "elapsed_sec": round(elapsed, 2),
         **{f"metric_{k}": v for k, v in res.metrics.items()},

@@ -10,8 +10,12 @@ the parallelism level rather than the 200 default.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -87,3 +91,30 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: StructType
+) -> DataFrame:
+    """A driver-sized frame of ``rows`` (tuples in ``schema`` field order)
+    as an Arrow local relation.
+
+    ``spark.createDataFrame(<python list>)`` parallelizes the list and
+    converts it in Python workers — a Spark job per frame, which dominates
+    for the few-hundred-row grids, lineage rows and verdict inputs the
+    engine builds on the driver. An Arrow table plans as a LocalTableScan
+    instead: no job, no Python worker. ``schema`` round-trips exactly
+    (nullability included), and a None in a non-nullable field raises
+    ValueError, as createDataFrame's schema verification does.
+    """
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for field, afield, col in zip(schema.fields, arrow, cols):
+        arr = pa.array(col, type=afield.type)
+        if not field.nullable and arr.null_count:
+            raise ValueError(
+                f"field {field.name}: this field is not nullable, but got None"
+            )
+        arrays.append(arr)
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow))

@@ -45,6 +45,7 @@ from autoprepad_spark.operators.marking import mark_slim
 from autoprepad_spark.operators.profile import ProfileStats
 from autoprepad_spark.plans import verdicts as V
 from autoprepad_spark.plans.suite import ALL_CHECKS
+from autoprepad_spark.session import local_frame
 
 
 @dataclass(frozen=True)
@@ -135,7 +136,7 @@ def _dedup_batch(
             .select(*INC.INDEX_COLS)
         )
     else:
-        idx = spark.createDataFrame([], index_schema)
+        idx = local_frame(spark, [], index_schema)
 
     hashed = batch_df.withColumn("_ch", INC.content_hash(cfg.text_col))
     rn = F.row_number().over(W.partitionBy("_ch").orderBy(cfg.id_col))

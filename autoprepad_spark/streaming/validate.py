@@ -34,6 +34,7 @@ from autoprepad_spark.operators.profile import ProfileStats
 from autoprepad_spark.plans import verdicts as V
 from autoprepad_spark.plans.suite import ALL_CHECKS
 from autoprepad_spark.schema import TOKENS_SCHEMA
+from autoprepad_spark.session import local_frame
 
 
 def stream_validate(
@@ -380,7 +381,7 @@ def stream_dedup_against_index(
                 .select(*INC.INDEX_COLS)
             )
         else:
-            idx = spark.createDataFrame([], index_schema)
+            idx = local_frame(spark, [], index_schema)
         # intra-batch exact keep-first (deterministic: smallest id wins)
         hashed = batch_df.withColumn("_ch", INC.content_hash(text_col))
         rn = F.row_number().over(W.partitionBy("_ch").orderBy(id_col))
